@@ -19,8 +19,13 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # balance a small-file scan; at real scale the scan is already
-    # wide and this must NOT force a full shuffle (see dedup._docs)
+    """The documents table, the one scan every documents query starts
+    from. Spread a small-file scan across cores before the CPU-heavy
+    per-row expressions — but ONLY when the scan is actually
+    under-partitioned. An unconditional repartition would be a full
+    shuffle of the corpus at 100 TB, where the parquet scan already
+    yields thousands of partitions and needs no help (and map-only
+    queries must stay map-only)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     p = spark.sparkContext.defaultParallelism
     if d.rdd.getNumPartitions() < p:
@@ -2000,37 +2005,6 @@ GOPHER_MAX_WORDS = 100_000
 
 
 # --- multi-signal quality ensemble --------------------------------------------
-
-
-def _midrank_map(vals: DataFrame, col: str) -> DataFrame:
-    """Distributed exact mid-rank percentile of a QUANTIZED signal:
-    per-value counts (map-side partials) → cumulative window over the
-    bounded distinct-value frame (quantization bounds it: quality is
-    quarters, ratios/entropy are 3dp → ≤8001 values) → broadcast
-    value→percentile map. pct(v) = (below + ½·eq)/N — the mid-rank
-    convention, so ascending and descending orientations are exact
-    complements. No corpus-sized global sort anywhere."""
-    from pyspark.sql.window import Window
-
-    cnt = vals.groupBy(col).agg(F.count("*").alias("c"))
-    # bounded-window: frame is the distinct-value table of an integer signal
-    # (≤8001 values by construction), never the corpus
-    w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-    tot = vals.agg(F.count("*").cast("double").alias("nn"))
-    return (
-        cnt.select(
-            col,
-            (F.sum("c").over(w) - F.col("c")).alias("below"),
-            "c",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            col,
-            ((F.col("below") + 0.5 * F.col("c")) / F.col("nn")).alias(
-                f"pct_{col}"
-            ),
-        )
-    )
 
 
 def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:

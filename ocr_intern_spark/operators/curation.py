@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ocr_intern_spark.functions.text import (
     _QUALITY_SQL,
+    _docs,
     quality_score,
     token_count,
 )
@@ -30,14 +31,6 @@ BENCH_MOD = 10        # doc_id % BENCH_MOD == 0 → "benchmark" doc
                       # (a 10% slice: wide enough to intersect the
                       # synthetic corpus's duplicate families at
                       # every sf, so the query is never vacuous)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 def _grams(d: DataFrame, ngram: int = DECON_NGRAM) -> DataFrame:
@@ -1410,10 +1403,12 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joined in exactly the same plan position.
 
     Scale shape: gram explosion is a narrow codegen'd projection
-    (split + zip_with, no UDF); the only exchanges are the tiny
-    distinct-gram dictionary aggregate and the final doc_id hash
-    aggregate with map-side SUM/COUNT partials. Integer logits —
-    no float summation-order hazard between engines.
+    (split + zip_with, no UDF) and the bucket weight is a per-row
+    expression, not a join; the single aggregate exchange is the
+    final doc_id hash aggregate with map-side SUM/COUNT partials
+    (besides it: _docs' balancing repartition on an under-partitioned
+    scan, and the presentation sort). Integer logits — no float
+    summation-order hazard between engines.
 
     r6 audit: two rewrites of the double FNV fold were tried and BOTH
     REVERTED on measurement — (a) weights per DISTINCT gram joined

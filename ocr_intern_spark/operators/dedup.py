@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_intern_spark.functions.text import STOPWORDS, fingerprint
+from ocr_intern_spark.functions.text import STOPWORDS, _docs, fingerprint
 
 N_SHINGLE = 3          # words per shingle
 MINHASH_SEEDS = 8      # signature length
@@ -47,19 +47,6 @@ def _round_checkpoint(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint()
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spread a small-file scan across cores before the CPU-heavy
-    # shingle/hash expressions — but ONLY when the scan is actually
-    # under-partitioned. An unconditional repartition would be a full
-    # shuffle of the corpus at 100 TB, where the parquet scan already
-    # yields thousands of partitions and needs no help.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 def _shingles(d: DataFrame, blur: bool = True) -> DataFrame:

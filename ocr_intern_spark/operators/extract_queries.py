@@ -24,22 +24,11 @@ from ocr_intern_spark.functions.normalizers import (
     classify_doc_type,
     normalize_field,
 )
+from ocr_intern_spark.functions.text import _docs
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _docs_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with a balancing repartition ONLY when the small-file
-    test scan under-parallelizes (mirrors curation._docs) — at real
-    scale the scan is already wide and map-only queries must stay
-    map-only."""
-    d = _t(spark, sf_dir, "documents")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 # --- A1 doc-type classification (postprocess.py:77-97) --------------------
@@ -588,7 +577,7 @@ def q_dehyphenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — split, indexed transform, two regex passes, md5; no
     shuffle before the presentation sort. A 100 TB corpus runs this
     as a map-only stage fused with whatever scan feeds it."""
-    d = _docs_balanced(spark, sf_dir)
+    d = _docs(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     norm = F.array_join(toks, " ")
     half = lambda w: (F.length(w) / 2).cast("int")
@@ -676,7 +665,7 @@ def q_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: a pure per-row projection — 6 chained replaces + 6
     counts inside whole-stage codegen; no shuffle before the
     presentation sort. Map-only at any corpus size."""
-    d = _docs_balanced(spark, sf_dir)
+    d = _docs(spark, sf_dir)
     did = F.col("doc_id")
     mod4 = did % 4
     probe = F.concat(

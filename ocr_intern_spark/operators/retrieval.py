@@ -25,13 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
+from ocr_intern_spark.functions.text import _docs
 
 
 # --- BM25 keyword search -----------------------------------------------------

@@ -50,52 +50,160 @@ import os
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
+from typing import Iterator, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 _N_FILES = 8
 
 
-def _stage(spark: SparkSession, sf_dir: str, table: str, dest: str) -> None:
-    """Stage a test table as _N_FILES parquet part-files under dest."""
+@contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A private temp dir for one query's staging, checkpoint and sink,
+    removed on exit. Results must be materialized before it closes."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def _utc(spark: SparkSession) -> Iterator[None]:
+    """Spark 4 watermarks require TIMESTAMP (not NTZ): the watermarked
+    queries read the zoneless parquet as LTZ under this UTC session-zone
+    pin so the wall values and the day buckets match the oracle's
+    date_trunc exactly. The pin is RESTORED on exit, and callers
+    materialize their result eagerly inside the pinned window so the
+    returned frame is zone-independent at collect time."""
+    tz_key = "spark.sql.session.timeZone"
+    old_tz = spark.conf.get(tz_key, None)
+    spark.conf.set(tz_key, "UTC")
+    try:
+        yield
+    finally:
+        if old_tz is None:
+            spark.conf.unset(tz_key)
+        else:
+            spark.conf.set(tz_key, old_tz)
+
+
+def _file_stream(
+    spark: SparkSession, in_dir: str, schema: StructType | str
+) -> DataFrame:
+    """File-source stream over the staged parquet files in in_dir, one
+    file per micro-batch (maxFilesPerTrigger=1)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+
+def _stage(
+    spark: SparkSession, sf_dir: str, table: str, dest: str
+) -> StructType:
+    """Stage a test table as _N_FILES parquet part-files under dest;
+    return the staged files' schema (the stream source schema)."""
     (
         spark.read.parquet(f"{sf_dir}/{table}.parquet")
         .repartition(_N_FILES)
         .write.mode("overwrite")
         .parquet(dest)
     )
+    return spark.read.parquet(dest).schema
 
 
-def _part_files(staged_dir: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(staged_dir, "part-*.parquet")))
+def _pin_batch_order(path: str, k: int) -> None:
+    """Make the staged file at path micro-batch k. Spark's file-stream
+    source sorts pending files by modification TIMESTAMP ONLY (path is
+    not a tie-break — verified empirically: equal mtimes scramble the
+    batch sequence), so an explicit mtime ladder is the one reliable
+    ordering channel. 60-second spacing makes it immune to coarse
+    mtime granularity (second- or even 2-second-resolution filesystems
+    preserve the order)."""
+    t = 1700000000 + k * 60
+    os.utime(path, (t, t))
 
 
-def _run_to_memory_complete(
-    stream_agg: DataFrame, ckpt: str, min_batches: int = 2
-) -> DataFrame:
-    """Run a streaming aggregation to completion (AvailableNow) into a
-    memory sink in complete mode; return the final table. Raises if the
-    run collapsed into a single micro-batch (the incremental-state path
-    would then be untested)."""
+def _stage_time_sliced(
+    rows: Sequence, cols: Sequence[str], in_dir: str, n_files: int
+) -> None:
+    """Stage rows pre-sorted by (ts, event_id) as n_files TIME-SLICED
+    parquet files: file k holds the k-th contiguous ceil-sized slice
+    of that order, and its mtime pins it as micro-batch k. Every row in
+    batch k+1 is then ≥ the watermark's anchor in batch k, so no row is
+    ever late — the append-mode queries' emitted set is a pure function
+    of the data instead of depending on Spark's drop timing.
+    Harness-side staging at test scale (the rows pass through the
+    driver), not the operator path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(in_dir)
+    per = max(1, (len(rows) + n_files - 1) // n_files)
+    for k in range(n_files):
+        chunk = rows[k * per : (k + 1) * per]
+        if not chunk:
+            break
+        path = os.path.join(in_dir, f"part-{k:05d}.parquet")
+        pq.write_table(
+            pa.table({c: [getattr(r, c) for r in chunk] for c in cols}), path
+        )
+        _pin_batch_order(path, k)
+
+
+def _data_batches(q: StreamingQuery, min_batches: int) -> list[dict]:
+    """Progress of q's DATA micro-batches (the no-data flush batches
+    dropped). Raises if the run had fewer than min_batches of them: a
+    run collapsed into a single micro-batch leaves the incremental-state
+    path untested."""
+    progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    if len(progress) < min_batches:
+        raise RuntimeError(
+            f"streaming query ran as {len(progress)} micro-batch(es); "
+            f"expected >= {min_batches} (maxFilesPerTrigger not honored?)"
+        )
+    return progress
+
+
+def _run_to_memory(
+    df: DataFrame, ckpt: str, mode: str, min_batches: int = 2
+) -> tuple[DataFrame, list[dict]]:
+    """Run a streaming frame to completion (AvailableNow) into a memory
+    sink in the given output mode ("complete" or "append"); return the
+    sink table and the data micro-batches' progress. Raises through
+    _data_batches if the run had fewer than min_batches of them."""
     name = f"sq_{uuid.uuid4().hex}"
     q = (
-        stream_agg.writeStream.format("memory")
+        df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("complete")
+        .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if n_batches < min_batches:
-        raise RuntimeError(
-            f"streaming query ran as {n_batches} micro-batch(es); "
-            f"expected >= {min_batches} (maxFilesPerTrigger not honored?)"
-        )
-    spark_table = stream_agg.sparkSession.table(name)
-    return spark_table
+    progress = _data_batches(q, min_batches)
+    return df.sparkSession.table(name), progress
+
+
+def _count_and_cents() -> list[Column]:
+    """n_events plus the per-group sum of value integerized to cents
+    per row (floor(value*100) — identical IEEE double math in both
+    engines, so the running sum is exact), emitted as a digit string:
+    Spark BIGINT vs DuckDB HUGEINT render differently past 9
+    significant digits."""
+    return [
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.floor(F.col("value") * 100).cast("long"))
+        .cast("string")
+        .alias("value_cents"),
+    ]
 
 
 def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,30 +214,20 @@ def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines) so the running sum is exact; the sum itself is
     emitted as a digit string (Spark BIGINT vs DuckDB HUGEINT render
     differently past 9 significant digits)."""
-    tmp = tempfile.mkdtemp(prefix="sq_events_")
-    try:
+    with _scratch("sq_events_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "events", in_dir)
         )
         agg = stream.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
-            .cast("string")
-            .alias("value_cents"),
+            *_count_and_cents(),
             F.min("event_id").alias("first_event"),
             F.max("event_id").alias("last_event"),
         )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        out, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "complete")
         return out.select(
             "event_type", "n_events", "value_cents", "first_event", "last_event"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_EVENTS_SUMMARY_SQL = """
@@ -152,15 +250,10 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded state is extract_stream.stream_dedup_exact (watermarked,
     append); this complete-mode run is its hash-checkable proof at
     test scale."""
-    tmp = tempfile.mkdtemp(prefix="sq_dedupfp_")
-    try:
+    with _scratch("sq_dedupfp_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "documents", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "documents", in_dir)
         )
         fp = F.md5(
             F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
@@ -169,10 +262,8 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("keep_doc"),
         )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        out, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "complete")
         return out.select("fp", "n_docs", "keep_doc")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_DEDUP_FP_SQL = """
@@ -196,58 +287,44 @@ def q_stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once (a duplicated or dropped micro-batch changes the
     hash). Mirrors sources/storage.py's batch resume contract
     (manifest anti-join), here via Spark's own streaming logs."""
-    tmp = tempfile.mkdtemp(prefix="sq_resume_")
-    try:
+    with _scratch("sq_resume_") as tmp:
         all_dir = os.path.join(tmp, "all")
         in_dir = os.path.join(tmp, "in")
         out_dir = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        _stage(spark, sf_dir, "documents", all_dir)
-        parts = _part_files(all_dir)
+        schema = _stage(spark, sf_dir, "documents", all_dir)
+        parts = sorted(glob.glob(os.path.join(all_dir, "part-*.parquet")))
         os.makedirs(in_dir)
         for p in parts[: len(parts) // 2]:
             shutil.copy(p, in_dir)
-        schema = spark.read.parquet(all_dir).schema
+        toks = F.split(F.trim(F.col("text")), r"\s+")
+        stats = _file_stream(spark, in_dir, schema).select(
+            "doc_id",
+            F.when(F.length(F.trim("text")) == 0, F.lit(0))
+            .otherwise(F.size(toks))
+            .alias("n_tokens"),
+            F.length("text").alias("n_chars"),
+        )
 
-        def run_once() -> int:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-            toks = F.split(F.trim(F.col("text")), r"\s+")
-            stats = stream.select(
-                "doc_id",
-                F.when(F.length(F.trim("text")) == 0, F.lit(0))
-                .otherwise(F.size(toks))
-                .alias("n_tokens"),
-                F.length("text").alias("n_chars"),
-            )
+        def run_once() -> None:
             q = (
                 stats.writeStream.format("parquet")
                 .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
+                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
                 .outputMode("append")
                 .trigger(availableNow=True)
                 .start()
             )
             q.awaitTermination()
-            return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+            _data_batches(q, 2)  # each run alone must be incremental
 
-        b1 = run_once()  # half the input, then 'crash'
+        run_once()  # half the input, then 'crash'
         for p in parts[len(parts) // 2 :]:
             shutil.copy(p, in_dir)
-        b2 = run_once()  # resume: same checkpoint, only new files
-        if b1 < 2 or b2 < 2:
-            raise RuntimeError(
-                f"resume proof degenerate: {b1}/{b2} micro-batches per run"
-            )
+        run_once()  # resume: same checkpoint, only new files
         rows = spark.read.parquet(out_dir).collect()
         # materialize driver-side before the tmp sink is deleted; the
         # result is one small row per doc (bounded by the test corpus)
         return spark.createDataFrame(rows, "doc_id long, n_tokens int, n_chars int")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_RESUME_SQL = """
@@ -294,111 +371,39 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound. The time-sliced staging mirrors reality: event streams
     arrive roughly time-ordered, which is exactly why the watermark
     trade works."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_wma_")
-    try:
+    rows = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("ts", "event_type", "value", "event_id")
+        .orderBy("ts", "event_id")
+        .collect()
+    )  # harness-side staging at test scale, not the operator path
+    with _scratch("sq_wma_") as tmp, _utc(spark):
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        rows = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .select("ts", "event_type", "value", "event_id")
-            .orderBy("ts", "event_id")
-            .collect()
-        )  # harness-side staging at test scale, not the operator path
-        n = len(rows)
-        per = max(1, (n + _N_FILES - 1) // _N_FILES)
-        for k in range(_N_FILES):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "event_type": [r.event_type for r in chunk],
-                        "value": [r.value for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
-            )
-            # FileStreamSource orders by mtime: pin batch order == slice
-            # order so the no-late-data invariant above actually holds
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        # Spark 4 watermarks require TIMESTAMP (not NTZ): read the
-        # zoneless parquet as LTZ under a UTC session-zone pin so the
-        # wall values and the day buckets match the oracle's
-        # date_trunc exactly. The pin is RESTORED in finally, and the
-        # result is materialized eagerly inside the pinned window so
-        # the returned frame is zone-independent at collect time.
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, event_type string, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-            agg = (
-                stream.withWatermark("ts", _WM_DELAY)
-                .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
-                    .cast("string")
-                    .alias("value_cents"),
-                )
-            )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"append-mode run collapsed to {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.day_start, r.event_type, r.n_events, r.value_cents)
-                for r in spark.table(name)
-                .select(
-                    F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                        "day_start"
-                    ),
-                    "event_type",
-                    "n_events",
-                    "value_cents",
-                )
-                .collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
-        return spark.createDataFrame(
-            final,
-            "day_start string, event_type string, n_events bigint, "
-            "value_cents string",
-        ).orderBy("day_start", "event_type")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        _stage_time_sliced(
+            rows, ("ts", "event_type", "value", "event_id"), in_dir, _N_FILES
+        )
+        stream = _file_stream(
+            spark,
+            in_dir,
+            "ts timestamp, event_type string, value double, event_id bigint",
+        )
+        agg = (
+            stream.withWatermark("ts", _WM_DELAY)
+            .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
+            .agg(*_count_and_cents())
+        )
+        out, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "append")
+        final = out.select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("day_start"),
+            "event_type",
+            "n_events",
+            "value_cents",
+        ).collect()
+    return spark.createDataFrame(
+        final,
+        "day_start string, event_type string, n_events bigint, "
+        "value_cents string",
+    ).orderBy("day_start", "event_type")
 
 
 _STREAM_WINDOWED_APPEND_SQL = """
@@ -446,109 +451,43 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the stream; at 10¹² events the same plan holds the same
     state bound, and session merging is the state store's job, never
     a shuffle of history."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_sess_")
-    try:
+    rows = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("ts", "user_id", "value", "event_id")
+        .orderBy("ts", "event_id")
+        .collect()
+    )  # harness-side staging at test scale, not the operator path
+    with _scratch("sq_sess_") as tmp, _utc(spark):
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        rows = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .select("ts", "user_id", "value", "event_id")
-            .orderBy("ts", "event_id")
-            .collect()
-        )  # harness-side staging at test scale, not the operator path
-        n = len(rows)
-        per = max(1, (n + _N_FILES - 1) // _N_FILES)
-        for k in range(_N_FILES):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "user_id": [r.user_id for r in chunk],
-                        "value": [r.value for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
+        _stage_time_sliced(
+            rows, ("ts", "user_id", "value", "event_id"), in_dir, _N_FILES
+        )
+        stream = _file_stream(
+            spark,
+            in_dir,
+            "ts timestamp, user_id bigint, value double, event_id bigint",
+        )
+        agg = (
+            stream.withWatermark("ts", _WM_DELAY)
+            .groupBy(
+                F.session_window("ts", _SESSION_GAP).alias("w"),
+                "user_id",
             )
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, user_id bigint, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-            agg = (
-                stream.withWatermark("ts", _WM_DELAY)
-                .groupBy(
-                    F.session_window("ts", _SESSION_GAP).alias("w"),
-                    "user_id",
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
-                    .cast("string")
-                    .alias("value_cents"),
-                )
-            )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"append-mode run collapsed to {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.user_id, r.s_start, r.s_end, r.n_events, r.value_cents)
-                for r in spark.table(name)
-                .select(
-                    "user_id",
-                    F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                        "s_start"
-                    ),
-                    F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias(
-                        "s_end"
-                    ),
-                    "n_events",
-                    "value_cents",
-                )
-                .collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
-        return spark.createDataFrame(
-            final,
-            "user_id bigint, s_start string, s_end string, "
-            "n_events bigint, value_cents string",
-        ).orderBy("user_id", "s_start")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            .agg(*_count_and_cents())
+        )
+        out, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "append")
+        final = out.select(
+            "user_id",
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("s_start"),
+            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("s_end"),
+            "n_events",
+            "value_cents",
+        ).collect()
+    return spark.createDataFrame(
+        final,
+        "user_id bigint, s_start string, s_end string, "
+        "n_events bigint, value_cents string",
+    ).orderBy("user_id", "s_start")
 
 
 _STREAM_SESSION_SQL = f"""
@@ -634,100 +573,40 @@ def _ssj_run(spark: SparkSession, rows, n_files: int = _N_FILES):
     stream-stream interval join over them; returns the emitted pairs
     as plain tuples. Split out so tests can inject a synthetic
     staging where a pair provably straddles micro-batches."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_ssj_")
-    try:
+    with _scratch("sq_ssj_") as tmp, _utc(spark):
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        n = len(rows)
-        per = max(1, (n + n_files - 1) // n_files)
-        for k in range(n_files):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "event_type": [r.event_type for r in chunk],
-                        "user_id": [r.user_id for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
-            )
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
+        _stage_time_sliced(
+            rows, ("ts", "event_type", "user_id", "event_id"), in_dir, n_files
+        )
+        schema = "ts timestamp, event_type string, user_id bigint, event_id bigint"
 
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            schema = (
-                "ts timestamp, event_type string, user_id bigint, "
-                "event_id bigint"
-            )
-
-            def side(ev: str, pre: str) -> DataFrame:
-                return (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(in_dir)
-                    .where(F.col("event_type") == ev)
-                    .select(
-                        F.col("user_id").alias(f"{pre}_user"),
-                        F.col("event_id").alias(f"{pre}_id"),
-                        F.col("ts").alias(f"{pre}_ts"),
-                    )
-                    .withWatermark(f"{pre}_ts", _SSJ_DELAY)
+        def side(ev: str, pre: str) -> DataFrame:
+            return (
+                _file_stream(spark, in_dir, schema)
+                .where(F.col("event_type") == ev)
+                .select(
+                    F.col("user_id").alias(f"{pre}_user"),
+                    F.col("event_id").alias(f"{pre}_id"),
+                    F.col("ts").alias(f"{pre}_ts"),
                 )
+                .withWatermark(f"{pre}_ts", _SSJ_DELAY)
+            )
 
-            joined = side("click", "c").join(
-                side("purchase", "p"),
-                F.expr(
-                    "c_user = p_user AND p_ts >= c_ts AND "
-                    f"p_ts <= c_ts + INTERVAL {_SSJ_INTERVAL_MIN} MINUTES"
-                ),
-            )
-            out = joined.select(
-                F.col("c_user").alias("user_id"),
-                F.col("c_id").alias("click_id"),
-                F.col("p_id").alias("purchase_id"),
-                (
-                    F.unix_micros("p_ts") - F.unix_micros("c_ts")
-                ).alias("gap_us"),
-            )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"stream-stream join ran as {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.user_id, r.click_id, r.purchase_id, r.gap_us)
-                for r in spark.table(name).collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
-        return final
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        joined = side("click", "c").join(
+            side("purchase", "p"),
+            F.expr(
+                "c_user = p_user AND p_ts >= c_ts AND "
+                f"p_ts <= c_ts + INTERVAL {_SSJ_INTERVAL_MIN} MINUTES"
+            ),
+        )
+        out = joined.select(
+            F.col("c_user").alias("user_id"),
+            F.col("c_id").alias("click_id"),
+            F.col("p_id").alias("purchase_id"),
+            (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
+        )
+        pairs, _ = _run_to_memory(out, os.path.join(tmp, "ckpt"), "append")
+        return [tuple(r) for r in pairs.collect()]
 
 
 _STREAM_SSJ_SQL = f"""
@@ -765,15 +644,10 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: complete-mode aggregation is micro-batch-order
     independent; the dim is a pure function of the batch table; sums
     emit as digit strings (the dsir lesson)."""
-    tmp = tempfile.mkdtemp(prefix="sq_enrich_")
-    try:
+    with _scratch("sq_enrich_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "events", in_dir)
         )
         ev_static = spark.read.parquet(f"{sf_dir}/events.parquet")
         profiles = (
@@ -795,24 +669,13 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined = stream.join(F.broadcast(profiles), "user_id", "left")
         agg = joined.groupBy(
             F.coalesce("tier", F.lit("none")).alias("tier"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
-            .cast("string")
-            .alias("value_cents"),
-        )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
-        rows = [
-            (r.tier, r.event_type, r.n_events, r.value_cents)
-            for r in out.collect()
-        ]
+        ).agg(*_count_and_cents())
+        out, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "complete")
         return spark.createDataFrame(
-            rows,
+            out.collect(),
             "tier string, event_type string, n_events bigint, "
             "value_cents string",
         ).orderBy("tier", "event_type")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_ENRICH_SQL = """
@@ -872,8 +735,7 @@ def q_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, batch by batch, not approximately."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    tmp = tempfile.mkdtemp(prefix="sq_late_")
-    try:
+    with _scratch("sq_late_") as tmp:
         in_dir = os.path.join(tmp, "in")
         os.makedirs(in_dir)
         # DISTRIBUTED staging (round-5 rework of the old collect() +
@@ -923,14 +785,6 @@ def q_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.partitionBy("slice")
             .parquet(stage_dir)
         )
-        # Micro-batch ORDER: Spark's file-stream source sorts pending
-        # files by modification TIMESTAMP ONLY (path is not a
-        # tie-break — verified empirically: equal mtimes scramble the
-        # batch sequence), so an explicit mtime ladder is the one
-        # reliable ordering channel. 60-second spacing makes it
-        # immune to coarse mtime granularity (second- or even
-        # 2-second-resolution filesystems preserve the order), which
-        # was the fragility of the old write-order-derived ladder.
         for k in range(_N_FILES):
             d = os.path.join(stage_dir, f"slice={k}")
             if not os.path.isdir(d):
@@ -944,61 +798,33 @@ def q_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             dst = os.path.join(in_dir, f"part-{k:05d}.parquet")
             os.rename(os.path.join(d, parts[0]), dst)
-            os.utime(dst, (1700000000 + k * 60, 1700000000 + k * 60))
+            _pin_batch_order(dst, k)
 
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, event_type string, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
+        with _utc(spark):
+            stream = _file_stream(
+                spark,
+                in_dir,
+                "ts timestamp, event_type string, value double, event_id bigint",
             )
             agg = (
                 stream.withWatermark("ts", _WM_DELAY)
                 .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
                 .agg(F.count(F.lit(1)).alias("n_events"))
             )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+            _, progress = _run_to_memory(
+                agg, os.path.join(tmp, "ckpt"), "append", min_batches=_N_FILES
             )
-            q.awaitTermination()
-            audit = []
-            for p in q.recentProgress:
-                if p["numInputRows"] == 0:
-                    continue
-                so = p["stateOperators"][0]
-                audit.append(
-                    (
-                        len(audit),
-                        int(p["numInputRows"]),
-                        int(so["numRowsDroppedByWatermark"]),
-                    )
-                )
-            if len(audit) < _N_FILES:
-                raise RuntimeError(
-                    f"expected {_N_FILES} data micro-batches, got {len(audit)}"
-                )
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
-        return spark.createDataFrame(
-            audit, "batch int, n_input bigint, n_dropped_late bigint"
-        ).orderBy("batch")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    audit = [
+        (
+            i,
+            int(p["numInputRows"]),
+            int(p["stateOperators"][0]["numRowsDroppedByWatermark"]),
+        )
+        for i, p in enumerate(progress)
+    ]
+    return spark.createDataFrame(
+        audit, "batch int, n_input bigint, n_dropped_late bigint"
+    ).orderBy("batch")
 
 
 _STREAM_LATE_DROP_SQL = f"""
@@ -1057,30 +883,23 @@ def q_stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_finalize,
     )
 
-    tmp = tempfile.mkdtemp(prefix="sq_hll_")
-    try:
+    with _scratch("sq_hll_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "events", in_dir)
         )
         agg = (
             hll_decompose(stream.select("user_id"))
             .groupBy("j")
             .agg(F.max("r").alias("m"))
         )
-        regs = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        regs, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "complete")
         ev = spark.read.parquet(in_dir).select("user_id")
         # materialize before the tmp dir vanishes (hll_finalize's
         # exact-distinct audit re-reads ev lazily)
         out = hll_finalize(regs, ev)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_hll_sql() -> str:
@@ -1106,15 +925,10 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cms_bucket,
     )
 
-    tmp = tempfile.mkdtemp(prefix="sq_cms_")
-    try:
+    with _scratch("sq_cms_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "events", in_dir)
         )
         rows_i = F.explode(
             F.sequence(F.lit(0), F.lit(CMS_D - 1))
@@ -1123,9 +937,8 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i", _cms_bucket(F.col("i"), F.col("user_id")).alias("b")
         )
         agg = cells.groupBy("i", "b").agg(F.count(F.lit(1)).alias("cnt"))
-        sketch = _run_to_memory_complete(
-            agg, os.path.join(tmp, "ckpt")
-        ).persist()
+        sketch, _ = _run_to_memory(agg, os.path.join(tmp, "ckpt"), "complete")
+        sketch = sketch.persist()
         ev = spark.read.parquet(in_dir).select("user_id")
         exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_exact"))
         probes = exact.select("user_id", rows_i).select(
@@ -1151,8 +964,6 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_cms_sql() -> str:

@@ -69,9 +69,13 @@ def test_stream_resume_exactly_once(spark):
     assert _as_sets(got) == _as_sets(want)
 
 
-def test_degenerate_single_batch_raises(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["complete", "append"])
+def test_degenerate_single_batch_raises(spark, tmp_path, mode):
     """A run that collapses to one micro-batch must raise, not silently
-    pass: stage ONE file so maxFilesPerTrigger=1 yields one batch."""
+    pass: stage ONE file so maxFilesPerTrigger=1 yields one batch. Both
+    output modes the stream queries use go through the same guard
+    (append runs a stateless projection: an unwatermarked aggregation
+    cannot run in append mode)."""
     from ocr_intern_spark.streaming import stream_queries as sq
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -82,9 +86,12 @@ def test_degenerate_single_batch_raises(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(one)
     )
-    agg = stream.groupBy("lang").count()
+    if mode == "complete":
+        df = stream.groupBy("lang").count()
+    else:
+        df = stream.select("doc_id", "lang")
     with pytest.raises(RuntimeError, match="micro-batch"):
-        sq._run_to_memory_complete(agg, str(tmp_path / "ckpt"))
+        sq._run_to_memory(df, str(tmp_path / "ckpt"), mode)
 
 
 def test_windowed_append_matches_batch_horizon(spark):

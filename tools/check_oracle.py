@@ -10,11 +10,19 @@ and an order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the tree this script lives in, whichever checkout or copy that
+# is: the driver imports it from here, and so do the Python workers
+# (UDFs, data sources), which see PYTHONPATH rather than sys.path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
